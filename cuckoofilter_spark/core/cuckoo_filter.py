@@ -52,32 +52,7 @@ class CuckooFilter:
     def insert(self, keys: np.ndarray) -> np.ndarray:
         """Batch insert; returns per-key success booleans
         (``insertElement``, ``CF/cuckoo_filter.h:226-236``)."""
-        keys = np.asarray(keys)
-        n = len(keys)
-        ok = np.zeros(n, dtype=bool)
-        if n == 0:
-            return ok
-        if self.victim is not None:
-            return ok  # filter full: victim pending
-        fp, i1 = self.first_pass(keys)
-        placed1 = self.table.bulk_place(fp, i1)
-        ok |= placed1
-        pend = ~placed1
-        if pend.any():
-            i2 = self.table.complement(i1[pend], fp[pend])
-            placed2 = self.table.bulk_place(fp[pend], i2)
-            ok[np.nonzero(pend)[0][placed2]] = True
-            # residue: bounded kick loop, original order
-            res_pos = np.nonzero(pend)[0][~placed2]
-            res_i2 = i2[~placed2]
-            for k, pos in enumerate(res_pos):
-                if self.victim is not None:
-                    break  # full: remaining items fail
-                leftover = self.table.kick_insert(int(fp[pos]), int(res_i2[k]), self.rng)
-                ok[pos] = True  # reference insert() returns true even when parking
-                if leftover is not None:
-                    self.victim = leftover
-        return ok
+        return self.insert_fps(*self.first_pass(keys))
 
     def insert_fps(self, fps: np.ndarray, bidx: np.ndarray) -> np.ndarray:
         """Insert pre-computed (fp, bucket) pairs — the merge path.  Either
@@ -85,7 +60,7 @@ class CuckooFilter:
         n = len(fps)
         ok = np.zeros(n, dtype=bool)
         if n == 0 or self.victim is not None:
-            return ok
+            return ok  # victim pending: filter full
         placed1 = self.table.bulk_place(fps, bidx)
         ok |= placed1
         pend = ~placed1
@@ -93,13 +68,14 @@ class CuckooFilter:
             i2 = self.table.complement(bidx[pend], fps[pend])
             placed2 = self.table.bulk_place(fps[pend], i2)
             ok[np.nonzero(pend)[0][placed2]] = True
+            # residue: bounded kick loop, original order
             res_pos = np.nonzero(pend)[0][~placed2]
             res_i2 = i2[~placed2]
             for k, pos in enumerate(res_pos):
                 if self.victim is not None:
-                    break
+                    break  # full: remaining items fail
                 leftover = self.table.kick_insert(int(fps[pos]), int(res_i2[k]), self.rng)
-                ok[pos] = True
+                ok[pos] = True  # reference insert() returns true even when parking
                 if leftover is not None:
                     self.victim = leftover
         return ok

@@ -1,18 +1,28 @@
-"""Distributed filter/sketch build: per-partition Arrow-vectorized build →
-deterministic multi-level tree merge.
+"""Distributed filter/sketch build: the one per-partition build →
+deterministic tree-merge driver behind every global filter and sketch.
 
 This is the Spark-native replacement for the reference's single-threaded
 insert loop (``Demo/cf_demo.cpp:16-27``) and the distributed analog of DCF
-chain growth + compaction (SURVEY.md §3.3): each input partition builds one
-``DynamicCuckooFilter`` inside ``mapInPandas`` (NumPy batch kernels over
-Arrow record batches — no per-row Python), then filters are folded together
-level by level with a **deterministic merge tree**: blobs are grouped by
-``partition_id // fanin`` and each group is folded in ascending partition-id
-order inside ``applyInPandas``.  Unlike ``RDD.treeAggregate`` (whose reduce
-order follows task completion), the tree shape and fold order here are pure
-functions of the partition ids — the same at local[8] and local[32], which
-is what makes "identical estimates at N and 4N executors" (north_rule) hold
-by construction rather than by commutativity luck.
+chain growth + compaction (SURVEY.md §3.3).  Every global build has two
+steps:
+
+1. the leaf: each input partition (or each planned file split) folds its
+   Arrow record batches into one partial — a ``DynamicCuckooFilter`` or any
+   ``Sketch`` — with NumPy batch kernels, no per-row Python, and emits one
+   ``BLOB_SCHEMA`` row (``mapInArrow``);
+2. ``tree_merge_blobs``: a **deterministic merge tree**.  Blobs are grouped
+   by ``partition_id // fanin`` and each group is folded in ascending
+   partition-id order inside ``applyInArrow`` (the blobs are plain binary,
+   so no pandas round trip); the driver folds the last ≤ fanin blobs in the
+   same order.  Unlike ``RDD.treeAggregate`` (whose reduce order follows
+   task completion), the tree shape and fold order here are pure functions
+   of the partition ids — the same at local[8] and local[32], which is what
+   makes "identical estimates at N and 4N executors" (north_rule) hold by
+   construction rather than by commutativity luck.
+
+The merge tree is parameterized only by the blob codec: CKF2 filter blobs
+(``FILTER_CODEC``) or tagged sketch blobs (``sketch_build.SKETCH_CODEC``);
+the cuckoo filter rides the sketch path as ``CuckooSketch``.
 
 Scale notes (100 TB / ~10^6 input partitions):
 - stage 1 emits ONE row (a few hundred KB zlib-packed) per input partition —
@@ -26,14 +36,19 @@ Scale notes (100 TB / ~10^6 input partitions):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import importlib
+from collections.abc import Callable, Iterable, Iterator
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
-from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
+# FILTER_CODEC looks both up in this module's globals
+from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter  # noqa: F401
 from cuckoofilter_spark.params import CuckooParams
 
 BLOB_SCHEMA = "pid long, blob binary, n_rows long, n_items long"
@@ -44,21 +59,33 @@ BLOB_SCHEMA = "pid long, blob binary, n_rows long, n_items long"
 ROW_GROUP_SPLIT_MAX_FILES = 48
 
 
-def _keys_from_series(s: pd.Series) -> np.ndarray:
-    """Extract a flat int64 key array from a scalar-int or array<int> column."""
-    if len(s) and isinstance(s.iloc[0], (list, np.ndarray)):
-        arrs = [np.asarray(a, dtype=np.int64) for a in s if a is not None and len(a)]
-        return np.concatenate(arrs) if arrs else np.empty(0, dtype=np.int64)
-    return s.to_numpy(dtype=np.int64, na_value=0)
+class BlobCodec(NamedTuple):
+    """A blob codec, named by the module whose globals hold its encode and
+    decode functions.  Both are looked up at call time: the driver-side
+    fold goes through whatever the module attribute is when it runs, and
+    executors resolve them in their own import of the module."""
+
+    module: str
+    encode: str
+    decode: str
+
+    def dumps(self, obj) -> bytes:
+        return getattr(importlib.import_module(self.module), self.encode)(obj)
+
+    def loads(self, blob: bytes):
+        return getattr(importlib.import_module(self.module), self.decode)(blob)
+
+
+#: CKF2 filter blobs (``core/serde``) — the split build, the FASTA build
+#: and the checkpoint's on-disk shard blobs
+FILTER_CODEC = BlobCodec(__name__, "serialize_filter", "deserialize_filter")
 
 
 def _keys_from_arrow(col) -> np.ndarray:
-    """Flatten an Arrow scalar-int or list<int> column to int64 — zero-copy
+    """Flatten an Arrow scalar-int or list<int> column — zero-copy
     offsets arithmetic, no per-row Python.  This path is ~10× faster than
     pandas list-of-array handling and is where "vectorized Arrow UDFs, no
     per-row Python" (north_star) is actually won or lost."""
-    import pyarrow as pa
-
     if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
         col = col.flatten()
     if col.null_count:
@@ -68,70 +95,94 @@ def _keys_from_arrow(col) -> np.ndarray:
     return col.to_numpy(zero_copy_only=False)
 
 
-def build_partition_udf(params: CuckooParams, dedup: bool = True):
-    """mapInArrow function: fold every Arrow batch of one partition into a
-    DynamicCuckooFilter; emit a single (pid, blob, n_rows, n_items) row.
+def blob_row(pid: int, blob: bytes, n_rows: int, n_items: int) -> pa.RecordBatch:
+    """The one ``BLOB_SCHEMA`` row a leaf or a merge group emits."""
+    return pa.record_batch({
+        "pid": pa.array([pid], pa.int64()),
+        "blob": pa.array([blob], pa.binary()),
+        "n_rows": pa.array([n_rows], pa.int64()),
+        "n_items": pa.array([n_items], pa.int64()),
+    })
 
-    ``dedup=True`` (set semantics) is the scale default: corpus token
-    streams are heavily skewed (Zipf), and a multiset filter would need one
-    slot per *occurrence* of a hot token — unbounded chain growth.  Set
-    semantics stores each distinct (bucket-pair, fp) once; membership
-    answers are identical."""
-    import pyarrow as pa
 
-    ptuple = params.to_tuple()
+def fold_batches(batches: Iterable[pa.RecordBatch], extract: Callable,
+                 update: Callable) -> tuple[int, int]:
+    """Fold record batches into one partial: ``update`` it with each
+    batch's first column, flattened by ``extract``.  Returns
+    (n_rows, n_items)."""
+    n_rows = n_items = 0
+    for b in batches:
+        vals = extract(b.column(0))
+        n_rows += b.num_rows
+        n_items += len(vals)
+        if len(vals):
+            update(vals)
+    return n_rows, n_items
 
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+
+def build_partials(df: DataFrame, col: str, factory: Callable[[int], object],
+                   extract: Callable, codec: BlobCodec, fanin: int,
+                   num_partitions: int | None = None):
+    """Fold partition ``pid`` of ``df[col]`` into ``factory(pid)`` (a
+    ``Sketch``: ``update``/``merge``), then tree-merge the partials.
+    Returns the merged partial, or None for an input with no partitions.
+
+    ``num_partitions``: fix the build parallelism explicitly.  Fixing it
+    (rather than inheriting the scan's split count) pins the merge tree, so
+    results are bit-identical across cluster sizes — the north_rule's
+    N-vs-4N invariance.  Salting/skew is irrelevant here because the build
+    is a narrow map (no shuffle by key); repartition only balances bytes."""
+    proj = df.select(col)  # column pruning reaches the scan
+    if num_partitions is not None:
+        proj = proj.repartition(num_partitions)
+        n_blobs = num_partitions
+    else:
+        n_blobs = proj.rdd.getNumPartitions()
+
+    def leaf(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
-        p = CuckooParams.from_tuple(ptuple)
-        filt = DynamicCuckooFilter(p, rng_seed=pid, dedup=dedup)
-        n_rows = 0
-        n_items = 0
+        partial = factory(pid)
+        n_rows, n_items = fold_batches(batches, extract, partial.update)
+        yield blob_row(pid, codec.dumps(partial), n_rows, n_items)
+
+    blobs = proj.mapInArrow(leaf, schema=BLOB_SCHEMA)
+    return tree_merge_blobs(blobs, fanin=fanin, n_blobs=n_blobs, codec=codec)[0]
+
+
+def split_blobs(spark, n_splits: int, build_split: Callable) -> DataFrame:
+    """Leaf stage over planned splits (file row groups, FASTA chunks): one
+    task per split id ``sid``; ``build_split(sid)`` returns
+    (blob, n_rows, n_items)."""
+
+    def leaf(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            keys = _keys_from_arrow(b.column(0))
-            n_rows += b.num_rows
-            n_items += len(keys)
-            if len(keys):
-                filt.insert(keys)
-        yield pa.record_batch({
-            "pid": pa.array([pid], pa.int64()),
-            "blob": pa.array([serialize_filter(filt)], pa.binary()),
-            "n_rows": pa.array([n_rows], pa.int64()),
-            "n_items": pa.array([n_items], pa.int64()),
-        })
+            for sid in b.column(0).to_pylist():
+                yield blob_row(sid, *build_split(sid))
 
-    return fn
+    ids = spark.range(0, n_splits, numPartitions=n_splits)
+    return ids.mapInArrow(leaf, schema=BLOB_SCHEMA)
 
 
-def _merge_group_udf():
-    """applyInPandas fold: merge a group's blobs in ascending pid order."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pid")
-        acc = None
-        for blob in pdf["blob"]:
-            f = deserialize_filter(bytes(blob))
-            if acc is None:
-                acc = f
-            else:
-                acc.merge(f)
-        gid = int(pdf["pid"].iloc[0])
-        return pd.DataFrame(
-            {"pid": [gid], "blob": [serialize_filter(acc)],
-             "n_rows": [int(pdf["n_rows"].sum())], "n_items": [int(pdf["n_items"].sum())]}
-        )
-
-    return fn
+def _fold_group(codec: BlobCodec, key: tuple, table: pa.Table) -> pa.Table:
+    """One executor merge group: fold its blobs in ascending pid order; the
+    group id becomes the next level's pid."""
+    acc = None
+    for blob in table.sort_by("pid").column("blob").to_pylist():
+        part = codec.loads(blob)
+        acc = part if acc is None else acc.merge(part)
+    return pa.Table.from_batches([blob_row(
+        key[0].as_py(), codec.dumps(acc), pc.sum(table["n_rows"]).as_py(),
+        pc.sum(table["n_items"]).as_py())])
 
 
 def tree_merge_blobs(blobs_df: DataFrame, fanin: int = 8,
-                     n_blobs: int | None = None):
-    """Deterministically fold a (pid, blob, n_rows, n_items) DataFrame down
-    to one filter.  Executor-side levels while > fanin blobs remain, then a
-    driver-side ordered fold of the last ≤ fanin.  Returns
-    (filter, n_rows, n_items).
+                     n_blobs: int | None = None, codec: BlobCodec = FILTER_CODEC):
+    """Deterministically fold a ``BLOB_SCHEMA`` DataFrame down to one
+    filter or sketch.  Executor-side levels while > fanin blobs remain,
+    then a driver-side ordered fold of the last ≤ fanin.  Returns
+    (merged, n_rows, n_items); merged is None when there are no blobs.
 
     ``n_blobs``: pass the known blob count (one per input partition) to
     avoid a ``count()`` action — counting would EXECUTE the whole upstream
@@ -143,8 +194,6 @@ def tree_merge_blobs(blobs_df: DataFrame, fanin: int = 8,
     parallelism — inverse scaling!); a fanin-f tree does that work in
     parallel executor stages and the driver only ever folds ≤ f blobs, so
     the critical path is ~f·(per-blob fingerprints)·log_f(P)."""
-    import pyspark.sql.functions as F
-
     df = blobs_df
     n = n_blobs if n_blobs is not None else df.count()
     # executor-side levels: each shrinks the blob count by `fanin`.
@@ -155,19 +204,15 @@ def tree_merge_blobs(blobs_df: DataFrame, fanin: int = 8,
         df = (
             df.withColumn("gid", (F.col("pid") / fanin).cast("long"))
             .groupBy("gid")
-            .applyInPandas(lambda pdf: _merge_group_udf()(pdf.drop(columns=["gid"])),
-                           schema=BLOB_SCHEMA)
-            .withColumn("pid", (F.col("pid") / fanin).cast("long"))
+            .applyInArrow(lambda key, table: _fold_group(codec, key, table),
+                          schema=BLOB_SCHEMA)
         )
         n = -(-n // fanin)
-    rows = df.collect()
-    rows.sort(key=lambda r: r["pid"])
     acc = None
-    n_rows = 0
-    n_items = 0
-    for r in rows:
-        f = deserialize_filter(bytes(r["blob"]))
-        acc = f if acc is None else acc.merge(f)
+    n_rows = n_items = 0
+    for r in sorted(df.collect(), key=lambda r: r["pid"]):
+        part = codec.loads(bytes(r["blob"]))
+        acc = part if acc is None else acc.merge(part)
         n_rows += r["n_rows"]
         n_items += r["n_items"]
     return acc, n_rows, n_items
@@ -190,14 +235,11 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
 
     The file→task assignment is sorted-deterministic, so the merge tree is
     pinned regardless of cluster size (north_rule invariance)."""
-    import pyarrow as pa
-
     files = sorted(_list_parquet_files(path))
     if not files:
         # an empty filter answers "non-member" to everything — a silent
         # wrong-path/permissions bug must not masquerade as that
         raise ValueError(f"no parquet files found under {path!r}")
-    ptuple = params.to_tuple()
     # Split granularity: one task per FILE by default.  When the file
     # count is small (single-file tables, small imports), split per ROW
     # GROUP instead — the footer reads that requires are one per file,
@@ -223,45 +265,18 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
     bc_files = spark.sparkContext.broadcast(files)
     bc_splits = spark.sparkContext.broadcast(splits)
 
-    def read_build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
+    def build_split(sid: int) -> tuple[bytes, int, int]:
+        fid, rg = bc_splits.value[sid]
+        filt = DynamicCuckooFilter(params, rng_seed=sid, dedup=dedup)
+        # small streaming batches: ~8k docs ≈ 2M tokens ≈ 9 MB — decode
+        # scratch stays cache-resident; whole-file reads measured ~10×
+        # slower under 32-way concurrency
+        batches = _open_parquet(bc_files.value[fid]).iter_batches(
+            columns=[col], batch_size=8192, row_groups=None if rg < 0 else [rg])
+        n_rows, n_items = fold_batches(batches, _keys_from_arrow, filt.insert)
+        return serialize_filter(filt), n_rows, n_items
 
-        p = CuckooParams.from_tuple(ptuple)
-        flist = bc_files.value
-        slist = bc_splits.value
-        for b in batches:
-            for sid in b.column(0).to_pylist():
-                fid, rg = slist[sid]
-                fpath = flist[fid]
-                filt = DynamicCuckooFilter(p, rng_seed=sid, dedup=dedup)
-                n_rows = 0
-                n_items = 0
-                if "://" in fpath:
-                    rfs, rpath = pafs.FileSystem.from_uri(fpath)
-                    pf = pq.ParquetFile(rfs.open_input_file(rpath))
-                else:
-                    pf = pq.ParquetFile(fpath)
-                # small streaming batches: ~8k docs ≈ 2M tokens ≈ 9 MB —
-                # decode scratch stays cache-resident; whole-file reads
-                # measured ~10× slower under 32-way concurrency
-                rgs = None if rg < 0 else [rg]
-                for rb in pf.iter_batches(columns=[col], batch_size=8192,
-                                          row_groups=rgs):
-                    keys = _keys_from_arrow(rb.column(0))
-                    n_rows += rb.num_rows
-                    n_items += len(keys)
-                    if len(keys):
-                        filt.insert(keys)
-                yield pa.record_batch({
-                    "pid": pa.array([sid], pa.int64()),
-                    "blob": pa.array([serialize_filter(filt)], pa.binary()),
-                    "n_rows": pa.array([n_rows], pa.int64()),
-                    "n_items": pa.array([n_items], pa.int64()),
-                })
-
-    ids_df = spark.range(0, len(splits), numPartitions=len(splits))
-    blobs = ids_df.mapInArrow(read_build, schema=BLOB_SCHEMA)
+    blobs = split_blobs(spark, len(splits), build_split)
     filt, _, _ = tree_merge_blobs(blobs, fanin=fanin, n_blobs=len(splits))
     if filt is None:
         filt = DynamicCuckooFilter(params, dedup=dedup)
@@ -270,14 +285,18 @@ def build_filter_from_parquet(spark, path: str, col: str, params: CuckooParams,
     return filt
 
 
-def _num_row_groups(fpath: str) -> int:
+def _open_parquet(fpath: str):
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     if "://" in fpath:
         rfs, rpath = pafs.FileSystem.from_uri(fpath)
-        return pq.ParquetFile(rfs.open_input_file(rpath)).metadata.num_row_groups
-    return pq.ParquetFile(fpath).metadata.num_row_groups
+        return pq.ParquetFile(rfs.open_input_file(rpath))
+    return pq.ParquetFile(fpath)
+
+
+def _num_row_groups(fpath: str) -> int:
+    return _open_parquet(fpath).metadata.num_row_groups
 
 
 def _list_parquet_files(path: str) -> list[str]:
@@ -317,24 +336,29 @@ def build_filter(df: DataFrame, col: str, params: CuckooParams,
                  fanin: int = 8, num_partitions: int | None = None,
                  compact: bool = True, dedup: bool = True) -> DynamicCuckooFilter:
     """Build a global DynamicCuckooFilter over ``df[col]`` (int column or
-    array<int> column).
+    array<int> column): ``build_sketch`` with a ``CuckooSketch`` factory.
+    ``num_partitions`` pins the merge tree (see ``build_partials``)."""
+    return _build_cuckoo(df, col, params, _keys_from_arrow, fanin=fanin,
+                         num_partitions=num_partitions, compact=compact, dedup=dedup)
 
-    ``num_partitions``: fix the build parallelism explicitly.  Fixing it
-    (rather than inheriting the scan's split count) pins the merge tree, so
-    results are bit-identical across cluster sizes — the north_rule's
-    N-vs-4N invariance.  Salting/skew is irrelevant here because the build
-    is a narrow map (no shuffle by key); repartition only balances bytes.
-    """
-    proj = df.select(col)  # column pruning reaches the scan
-    if num_partitions is not None:
-        proj = proj.repartition(num_partitions)
-        n_blobs = num_partitions
-    else:
-        n_blobs = proj.rdd.getNumPartitions()
-    blobs = proj.mapInArrow(build_partition_udf(params, dedup=dedup), schema=BLOB_SCHEMA)
-    filt, n_rows, n_items = tree_merge_blobs(blobs, fanin=fanin, n_blobs=n_blobs)
-    if filt is None:
-        filt = DynamicCuckooFilter(params)
+
+def _build_cuckoo(df: DataFrame, col: str, params: CuckooParams,
+                  extract: Callable, fanin: int, num_partitions: int | None,
+                  compact: bool, dedup: bool) -> DynamicCuckooFilter:
+    """The cuckoo filter as one more sketch: partition ``pid`` inserts into
+    ``CuckooSketch(params, seed=pid)``, tagged sketch blobs tree-merge.
+
+    ``dedup=True`` (set semantics) is the scale default: corpus token
+    streams are heavily skewed (Zipf), and a multiset filter would need one
+    slot per *occurrence* of a hot token — unbounded chain growth.  Set
+    semantics stores each distinct (bucket-pair, fp) once; membership
+    answers are identical."""
+    from cuckoofilter_spark.operators.sketch_build import SKETCH_CODEC
+    from cuckoofilter_spark.sketches.cuckoo_sketch import CuckooSketch
+
+    sk = build_partials(df, col, lambda pid: CuckooSketch(params, seed=pid, dedup=dedup),
+                        extract, SKETCH_CODEC, fanin, num_partitions)
+    filt = sk.filt if sk is not None else DynamicCuckooFilter(params, dedup=dedup)
     if compact:
         filt.compact()
     return filt

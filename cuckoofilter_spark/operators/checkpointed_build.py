@@ -3,7 +3,7 @@ and metrics (north_rule: "resumable from checkpoint with per-partition
 lineage + metrics persisted alongside checkpoints").
 
 Unlike the fast path (``operators/build.py``: one blob per *physical* input
-partition via ``mapInPandas``), the checkpointed build keys work by a
+partition via ``mapInArrow``), the checkpointed build keys work by a
 **stable logical shard**: ``shard = pmod(xxhash64(key, seed), n_shards)``.
 Shard identity is a pure function of the data — not of the scan's split
 count, task scheduling, or cluster size — which is what makes a checkpoint
@@ -31,9 +31,8 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,7 +40,9 @@ from cuckoofilter_spark.core.dynamic_filter import DynamicCuckooFilter
 from cuckoofilter_spark.core.serde import deserialize_filter, serialize_filter
 from cuckoofilter_spark.operators.build import (
     BLOB_SCHEMA,
-    _keys_from_series,
+    _keys_from_arrow,
+    blob_row,
+    fold_batches,
     tree_merge_blobs,
 )
 from cuckoofilter_spark.params import CuckooParams
@@ -65,19 +66,17 @@ def _manifest(params: CuckooParams, col: str, n_shards: int, dedup: bool) -> dic
 
 
 def _build_shard_udf(params: CuckooParams, dedup: bool):
-    ptuple = params.to_tuple()
+    """applyInArrow leaf: one shard's keys → one CKF2 blob row."""
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        p = CuckooParams.from_tuple(ptuple)
-        filt = DynamicCuckooFilter(p, rng_seed=shard, dedup=dedup)
-        keys = _keys_from_series(pdf.iloc[:, 0])
-        if len(keys):
-            filt.insert(keys)
-        return pd.DataFrame(
-            {"pid": [shard], "blob": [serialize_filter(filt)],
-             "n_rows": [len(pdf)], "n_items": [len(keys)]}
-        )
+    def fn(key: tuple, table: pa.Table) -> pa.Table:
+        shard = key[0].as_py()
+        filt = DynamicCuckooFilter(params, rng_seed=shard, dedup=dedup)
+        # one batch, so one insert call per shard: the bytes of a shard blob
+        # do not depend on how Spark batched the group
+        n_rows, n_items = fold_batches(table.combine_chunks().to_batches(),
+                                       _keys_from_arrow, filt.insert)
+        return pa.Table.from_batches([blob_row(shard, serialize_filter(filt),
+                                               n_rows, n_items)])
 
     return fn
 
@@ -154,8 +153,8 @@ class CheckpointedBuild:
             blobs = (
                 sharded.filter(F.col("shard").isin(attempt))
                 .groupBy("shard")
-                .applyInPandas(_build_shard_udf(self.params, self.dedup),
-                               schema=BLOB_SCHEMA)
+                .applyInArrow(_build_shard_udf(self.params, self.dedup),
+                              schema=BLOB_SCHEMA)
             )
             blobs.write.mode("append").parquet(self._blobs_path)
             # the write action completed → every attempted shard (including

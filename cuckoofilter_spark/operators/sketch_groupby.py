@@ -19,47 +19,57 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cuckoofilter_spark.sketches.base import deserialize_sketch, serialize_sketch
 from cuckoofilter_spark.sketches.hll import HyperLogLog
+
+
+def _per_key(df: DataFrame, key: str, sketch_of, emit, value_schema: str,
+             salt=None) -> DataFrame:
+    """One sketch per key: ``sketch_of(group_pdf)`` builds it and
+    ``emit(sketch, key_value)`` returns its output rows
+    (``{key} <type>, {value_schema}``).  With a ``salt`` column expression
+    the sketch is first built per (key, salt) and the partials are merged
+    per key — the skew path, exact for every sketch whose merge is exact
+    on its state."""
+    key_t = dict(df.dtypes)[key]
+    schema = f"{key} {key_t}, {value_schema}"
+    if salt is None:
+        return df.groupBy(key).applyInPandas(
+            lambda kdf: emit(sketch_of(kdf), kdf[key].iloc[0]), schema=schema)
+
+    def partial(kdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({key: [kdf[key].iloc[0]],
+                             "blob": [serialize_sketch(sketch_of(kdf))]})
+
+    def merge_emit(kdf: pd.DataFrame) -> pd.DataFrame:
+        acc = None
+        for b in kdf["blob"]:
+            s = deserialize_sketch(bytes(b))
+            acc = s if acc is None else acc.merge(s)
+        return emit(acc, kdf[key].iloc[0])
+
+    return (df.withColumn("_salt", salt).groupBy(key, "_salt")
+            .applyInPandas(partial, schema=f"{key} {key_t}, blob binary")
+            .groupBy(key).applyInPandas(merge_emit, schema=schema))
 
 
 def ndv_by_key(df: DataFrame, key: str, value: str, p: int = 12, seed: int = 7,
                salt_buckets: int | None = None) -> DataFrame:
     """(key, ndv_estimate) — one HLL per key."""
-    key_t = dict(df.dtypes)[key]
 
-    def build_blob(kdf: pd.DataFrame) -> pd.DataFrame:
+    def sketch_of(kdf: pd.DataFrame) -> HyperLogLog:
         hll = HyperLogLog(p=p, seed=seed)
         vals = kdf[value].to_numpy(dtype=np.int64, na_value=0)
         if len(vals):
             hll.update(vals)
-        return pd.DataFrame({key: [kdf[key].iloc[0]], "blob": [hll.to_bytes()]})
+        return hll
 
-    def merge_estimate(kdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in kdf["blob"]:
-            h = HyperLogLog.from_bytes(bytes(b))
-            acc = h if acc is None else acc.merge(h)
-        return pd.DataFrame({key: [kdf[key].iloc[0]],
-                             "ndv_estimate": [int(acc.estimate())]})
+    def emit(hll: HyperLogLog, kval) -> pd.DataFrame:
+        return pd.DataFrame({key: [kval], "ndv_estimate": [int(hll.estimate())]})
 
-    def estimate_direct(kdf: pd.DataFrame) -> pd.DataFrame:
-        hll = HyperLogLog(p=p, seed=seed)
-        vals = kdf[value].to_numpy(dtype=np.int64, na_value=0)
-        if len(vals):
-            hll.update(vals)
-        return pd.DataFrame({key: [kdf[key].iloc[0]],
-                             "ndv_estimate": [int(hll.estimate())]})
-
-    if salt_buckets:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(value)), F.lit(salt_buckets)))
-        partial = (salted.groupBy(key, "_salt")
-                   .applyInPandas(lambda kdf: build_blob(kdf.drop(columns=["_salt"])),
-                                  schema=f"{key} {key_t}, blob binary"))
-        return partial.groupBy(key).applyInPandas(
-            merge_estimate, schema=f"{key} {key_t}, ndv_estimate long")
-    return df.groupBy(key).applyInPandas(
-        estimate_direct, schema=f"{key} {key_t}, ndv_estimate long")
+    salt = (F.pmod(F.xxhash64(F.col(value)), F.lit(salt_buckets))
+            if salt_buckets else None)
+    return _per_key(df, key, sketch_of, emit, "ndv_estimate long", salt)
 
 
 def quantiles_by_key(df: DataFrame, key: str, value: str,
@@ -114,21 +124,14 @@ def topk_by_key(df: DataFrame, key: str, value: str, k: int = 1024,
     """
     from cuckoofilter_spark.sketches.spacesaving import SpaceSavingSketch
 
-    key_t = dict(df.dtypes)[key]
-    out_schema = f"{key} {key_t}, item string, est long, err long"
-
-    def _sketch_of(kdf: pd.DataFrame) -> SpaceSavingSketch:
+    def sketch_of(kdf: pd.DataFrame) -> SpaceSavingSketch:
         sk = SpaceSavingSketch(k=k)
         vals = kdf[value].dropna()
         if len(vals):
             sk.update(vals.to_numpy())
         return sk
 
-    def _build(kdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({key: [kdf[key].iloc[0]],
-                             "blob": [_sketch_of(kdf).to_bytes()]})
-
-    def _emit(sk: SpaceSavingSketch, kval) -> pd.DataFrame:
+    def emit(sk: SpaceSavingSketch, kval) -> pd.DataFrame:
         top = sk.top(m)
         return pd.DataFrame({
             key: np.repeat(kval, len(top)),
@@ -137,25 +140,9 @@ def topk_by_key(df: DataFrame, key: str, value: str, k: int = 1024,
             "err": np.full(len(top), sk.err, dtype=np.int64),
         })
 
-    def _merge_emit(kdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in kdf["blob"]:
-            s = SpaceSavingSketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        return _emit(acc, kdf[key].iloc[0])
-
-    def _direct(kdf: pd.DataFrame) -> pd.DataFrame:
-        return _emit(_sketch_of(kdf), kdf[key].iloc[0])
-
-    if salt_buckets:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(value).cast("string")),
-                            F.lit(salt_buckets)))
-        partial = (salted.groupBy(key, "_salt")
-                   .applyInPandas(lambda kdf: _build(kdf.drop(columns=["_salt"])),
-                                  schema=f"{key} {key_t}, blob binary"))
-        return partial.groupBy(key).applyInPandas(_merge_emit, schema=out_schema)
-    return df.groupBy(key).applyInPandas(_direct, schema=out_schema)
+    salt = (F.pmod(F.xxhash64(F.col(value).cast("string")), F.lit(salt_buckets))
+            if salt_buckets else None)
+    return _per_key(df, key, sketch_of, emit, "item string, est long, err long", salt)
 
 
 def kmv_by_key(df: DataFrame, key: str, value: str, k: int = 1024,
@@ -173,34 +160,16 @@ def kmv_by_key(df: DataFrame, key: str, value: str, k: int = 1024,
     """
     from cuckoofilter_spark.sketches.kmv import KMVSketch
 
-    key_t = dict(df.dtypes)[key]
-
-    def _sketch_of(kdf: pd.DataFrame) -> bytes:
+    def sketch_of(kdf: pd.DataFrame) -> KMVSketch:
         sk = KMVSketch(k=k, seed=seed)
         vals = kdf[value].dropna()
         if len(vals):
             sk.update(vals.to_numpy(dtype=np.int64))
-        return sk.to_bytes()
+        return sk
 
-    def _build(kdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({key: [kdf[key].iloc[0]],
-                             "blob": [_sketch_of(kdf)]})
+    def emit(sk: KMVSketch, kval) -> pd.DataFrame:
+        return pd.DataFrame({key: [kval], "blob": [sk.to_bytes()]})
 
-    def _merge(kdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in kdf["blob"]:
-            s = KMVSketch.from_bytes(bytes(b))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame({key: [kdf[key].iloc[0]],
-                             "blob": [acc.to_bytes()]})
-
-    if salt_buckets:
-        salted = df.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(value)), F.lit(salt_buckets)))
-        partial = (salted.groupBy(key, "_salt")
-                   .applyInPandas(lambda kdf: _build(kdf.drop(columns=["_salt"])),
-                                  schema=f"{key} {key_t}, blob binary"))
-        return partial.groupBy(key).applyInPandas(
-            _merge, schema=f"{key} {key_t}, blob binary")
-    return df.groupBy(key).applyInPandas(
-        _build, schema=f"{key} {key_t}, blob binary")
+    salt = (F.pmod(F.xxhash64(F.col(value)), F.lit(salt_buckets))
+            if salt_buckets else None)
+    return _per_key(df, key, sketch_of, emit, "blob binary", salt)

@@ -1464,33 +1464,16 @@ FROM events GROUP BY event_type
 """
 
 
-def q_streaming_windowed_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _windowed_ndv_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked event-time windows under the gate: per-day distinct
     users via the windowed stateful HLL operator
     (``streaming/windowed.py``, applyInPandasWithState + EventTimeTimeout),
     checked against the exact per-window batch answer within the 3σ HLL
     bound.  Window starts are emitted as epoch seconds so the oracle's
-    ``date_trunc('day')`` arithmetic is engine-neutral (session tz is
-    pinned UTC)."""
-    import uuid
-
-    from cuckoofilter_spark.streaming.windowed import windowed_distinct
-
-    # the whole computation happens inside this function, so pin the
-    # session tz for its duration: with any other tz the NTZ→LTZ cast
-    # shifts instants and day-window boundaries stop matching the
-    # oracle's naive date_trunc('day') (our own sessions are already UTC;
-    # this guards a driver-created session)
-    tz_key = "spark.sql.session.timeZone"
-    old_tz = spark.conf.get(tz_key)
-    spark.conf.set(tz_key, "UTC")
-    try:
-        return _windowed_ndv_utc(spark, sf_dir)
-    finally:
-        spark.conf.set(tz_key, old_tz)
-
-
-def _windowed_ndv_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ``date_trunc('day')`` arithmetic is engine-neutral.  The caller pins
+    the session tz to UTC: with any other tz the NTZ→LTZ cast shifts
+    instants and day-window boundaries stop matching the oracle's naive
+    ``date_trunc('day')``."""
     import uuid
 
     from cuckoofilter_spark.streaming.windowed import windowed_distinct
@@ -1807,21 +1790,23 @@ WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size = 1)
 """
 
 
-#: overridable so the suite isn't coupled to this host's reference checkout
-FASTA_PATH = os.environ.get("SPARK_GRAFT_FASTA",
-                            "/root/reference/Data/ecoli_small.fna")
+#: the committed synthetic genome (``scripts/make_fasta_fixture.py``),
+#: found next to the package; ``SPARK_GRAFT_FASTA`` points at another file
+FASTA_PATH = os.environ.get("SPARK_GRAFT_FASTA", os.path.normpath(os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), os.pardir, "data", "fasta",
+    "synth_small.fna")))
 FASTA_K = 10
 
 
 def q_fasta_kmers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FASTA end-to-end parity (Tests/cf_fasta_test.cpp:25-55 as a driver
-    query): distributed k-mer filter build over the reference's own
-    ``ecoli_small.fna``, then probe every distinct k-mer through the
-    Spark-side UDF — all are true members (zero false negatives), so the
+    query): distributed k-mer filter build over ``FASTA_PATH`` (by
+    default the committed synthetic genome), then probe every distinct
+    k-mer through the Spark-side UDF — all are true members (zero false negatives), so the
     surviving rows equal the exact distinct k-mer set the oracle computes
     by slicing the same file in SQL.  Both the build and the scan run the
-    CHUNKED byte-range path (chunk_bytes=256 fans this 1.1 kB file into
-    ~5 tasks — the same multi-task shape a 3 GB genome gets at the 16 MiB
+    CHUNKED byte-range path (chunk_bytes=256 fans the 3 kB fixture into
+    13 tasks — the same multi-task shape a 3 GB genome gets at the 16 MiB
     default), so the oracle gates chunk-boundary k-mer reassembly, not
     just the whole-file parse; the scan side goes through the registered
     `spark.read.format("fasta")` Python Data Source (the FastaIterator

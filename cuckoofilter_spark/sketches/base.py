@@ -6,11 +6,12 @@ Every sketch is a commutative monoid value:
     to_bytes() / from_bytes() / estimate(...)
 
 which is exactly what the distributed driver needs: per-partition ``update``
-inside ``mapInPandas`` (the partial aggregate), ``merge`` in the
-deterministic tree (the final aggregate), ``to_bytes`` for the shuffle and
-broadcast.  The cuckoo/Bloom filters answer membership, HLL distinct counts,
-count-min frequencies, KLL/t-digest quantiles — all over the same build
-pipeline (``operators/sketch_build.py``).
+over Arrow batches inside ``mapInArrow`` (the partial aggregate), ``merge``
+in the deterministic tree's ``applyInArrow`` levels and driver fold (the
+final aggregate), ``to_bytes`` for the shuffle and broadcast.  The
+cuckoo/Bloom filters answer membership, HLL distinct counts, count-min
+frequencies, KLL/t-digest quantiles — all over the same build driver
+(``operators/build.py``, via ``operators/sketch_build.py``).
 
 Wire format: 1-byte type tag + pickle-free struct/numpy payload per sketch
 (each class owns its layout); ``serialize_sketch``/``deserialize_sketch``

@@ -27,7 +27,8 @@ class CuckooSketch:
             params or CuckooParams(), rng_seed=seed, dedup=dedup)
 
     def update(self, batch: np.ndarray) -> None:
-        self.filt.insert(np.asarray(batch, dtype=np.int64))
+        # native integer width: hash64 widens without an int64 copy
+        self.filt.insert(batch)
 
     def merge(self, other: "CuckooSketch") -> "CuckooSketch":
         self.filt.merge(other.filt)

@@ -327,15 +327,12 @@ def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
     ``dedup=False`` = the reference's insert-a-copy-per-occurrence
     (``insertKmers``, ``Tests/cf_fasta_test.cpp:11-24``), which is what
     makes the delete-all phase restore an empty filter."""
-    import pyarrow as pa
-
     from cuckoofilter_spark.core.serde import serialize_filter
-    from cuckoofilter_spark.operators.build import BLOB_SCHEMA, tree_merge_blobs
+    from cuckoofilter_spark.operators.build import split_blobs, tree_merge_blobs
 
     files = sorted(paths)
     if not files:
         raise ValueError("no FASTA files given")
-    ptuple = params.to_tuple()
 
     if chunk_bytes is None:
         units: list = files
@@ -353,24 +350,13 @@ def build_fasta_filter(spark: SparkSession, paths: list[str], k: int,
 
     bc = spark.sparkContext.broadcast(units)
 
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        ulist = bc.value
-        p = CuckooParams.from_tuple(ptuple)
-        for b in batches:
-            for uid in b.column(0).to_pylist():
-                hashes = ngram_hashes(seq_bytes_of(ulist[uid]), k)
-                filt = DynamicCuckooFilter(p, rng_seed=uid, dedup=dedup)
-                if len(hashes):
-                    filt.insert(hashes.astype(np.int64))
-                yield pa.record_batch({
-                    "pid": pa.array([uid], pa.int64()),
-                    "blob": pa.array([serialize_filter(filt)], pa.binary()),
-                    "n_rows": pa.array([1], pa.int64()),
-                    "n_items": pa.array([len(hashes)], pa.int64()),
-                })
+    def build_unit(uid: int) -> tuple[bytes, int, int]:
+        hashes = ngram_hashes(seq_bytes_of(bc.value[uid]), k)
+        filt = DynamicCuckooFilter(params, rng_seed=uid, dedup=dedup)
+        filt.insert(hashes.astype(np.int64))
+        return serialize_filter(filt), 1, len(hashes)
 
-    ids = spark.range(0, len(units), numPartitions=len(units))
-    blobs = ids.mapInArrow(fn, schema=BLOB_SCHEMA)
+    blobs = split_blobs(spark, len(units), build_unit)
     filt, _, _ = tree_merge_blobs(blobs, fanin=fanin, n_blobs=len(units))
     return filt if filt is not None else DynamicCuckooFilter(params, dedup=dedup)
 

@@ -175,6 +175,13 @@ def test_distributed_build_all_reference_configs(spark):
         assert filt.contains(probes).all(), (epb, bits)
         fpr = filt.contains(negs).mean()
         assert fpr <= max(params.fpr_bound, 3 / len(negs)) * 3, (epb, bits, fpr)
+        # an input with no partitions still honours dedup (CKF2 kind byte
+        # 2 = set-semantics filter, 1 = multiset)
+        none = spark.range(0).select(F.col("id").alias("k"))
+        for dedup, kind in ((True, 2), (False, 1)):
+            empty = build_filter(none, "k", params, dedup=dedup)
+            assert empty.dedup is dedup and empty.element_count == 0
+            assert serialize_filter(empty)[4] == kind, (epb, bits, dedup)
 
 
 def test_parquet_listing_skips_uncommitted_temporary_files(spark, tmp_path):
