@@ -144,3 +144,6 @@ class CuckooFilter:
 
     def is_full(self) -> bool:
         return self.victim is not None
+
+    def memory_bytes(self) -> int:
+        return self.table.table.nbytes

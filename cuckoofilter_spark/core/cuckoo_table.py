@@ -156,6 +156,39 @@ class CuckooTable:
         self.element_count -= 1
         return True
 
+    def delete_in_order(self, bidx: np.ndarray, fps: np.ndarray) -> np.ndarray:
+        """``[delete_at(b, f) for b, f in zip(bidx, fps)]`` with the loop's
+        exact bytes (``bulk_delete_at`` keeps only the multiset), vectorized
+        in as many rounds as the most-requested bucket has requests —
+        ``entries_per_bucket`` at most when every request names a distinct
+        stored copy.  Round r applies each bucket's r-th request (in input
+        order) as ``delete_at`` does: first matching slot <- last occupied
+        slot, last slot <- 0; one request per bucket per round, so the
+        scatters never collide.  Returns the per-request deleted mask."""
+        n = len(bidx)
+        out = np.zeros(n, dtype=bool)
+        if n == 0:
+            return out
+        order = np.argsort(bidx, kind="stable")
+        sb = bidx[order]
+        sf = fps[order].astype(self.table.dtype)
+        _, start, counts = np.unique(sb, return_index=True, return_counts=True)
+        rank = np.arange(n, dtype=np.int64) - np.repeat(start, counts)
+        for r in range(int(counts.max())):
+            pos = np.nonzero(rank == r)[0]
+            match = self.table[sb[pos]] == sf[pos, None]
+            hit = match.any(axis=1)
+            pos, match = pos[hit], match[hit]
+            rows = sb[pos]
+            j = match.argmax(axis=1)
+            last = self.occ[rows].astype(np.int64) - 1
+            self.table[rows, j] = self.table[rows, last]
+            self.table[rows, last] = 0
+            self.occ[rows] -= 1
+            out[order[pos]] = True
+        self.element_count -= int(out.sum())
+        return out
+
     def bulk_delete_at(self, bidx: np.ndarray, fps: np.ndarray) -> np.ndarray:
         """Vectorized batch of ``delete_at``: for each (bucket, fp) request
         remove ONE stored copy if present; duplicate requests consume one

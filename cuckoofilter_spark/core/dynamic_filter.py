@@ -215,7 +215,12 @@ class DynamicCuckooFilter:
         drop emptied tables (``compact``/``moveElements``,
         ``DCF/dynamic_cuckoo_filter.h:435-493``, ``DCF/cuckoo_filter.h:286-305``).
         Donor order: ascending element count (the reference bubble-sorts the
-        same way, ``:477-493``) — canonical order keeps merges deterministic."""
+        same way, ``:477-493``) — canonical order keeps merges deterministic.
+        A partially drained donor drops its moved copies with one in-order
+        vectorized delete (``CuckooTable.delete_in_order``, at most
+        ``entries_per_bucket`` rounds) — the bytes a ``delete_at`` loop over
+        the bucket-sorted moved pairs leaves, without the per-fingerprint
+        Python loop."""
         if len(self.tables) <= 1:
             return
         order = sorted(range(len(self.tables)), key=lambda i: (self.tables[i].element_count, i))
@@ -247,8 +252,7 @@ class DynamicCuckooFilter:
                 d.element_count = 0
             elif moved_mask.any():
                 # physically remove the moved copies from the donor
-                for pos in np.nonzero(moved_mask)[0]:
-                    d.delete_at(int(rows[pos]), int(fps[pos]))
+                d.delete_in_order(rows[moved_mask], fps[moved_mask])
         self.tables = survivors if survivors else [CuckooTable(self.params)]
 
     # -- merge ------------------------------------------------------------------------

@@ -12,6 +12,7 @@ compute lanes on read.
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -82,7 +83,8 @@ def _unpack_table(params: CuckooParams, blob: bytes) -> CuckooTable:
     return CuckooTable(params, flat.reshape(params.table_size, params.entries_per_bucket))
 
 
-def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
+def _header(f: CuckooFilter | DynamicCuckooFilter) -> tuple[bytes, list[CuckooTable]]:
+    """The packed CKF2 header of *f* and the tables its body encodes."""
     if isinstance(f, CuckooFilter):
         kind = 0
         tables = [f.table]
@@ -93,14 +95,32 @@ def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
         tables = f.tables
         v_idx, v_fp = -1, 0
     p = f.params
-    parts = [_HDR.pack(_MAGIC, kind, p.max_table_size, p.entries_per_bucket,
-                       p.bits_per_fp, int(p.seed) & 0xFFFFFFFFFFFFFFFF,
-                       len(tables), v_idx, v_fp)]
+    hdr = _HDR.pack(_MAGIC, kind, p.max_table_size, p.entries_per_bucket,
+                    p.bits_per_fp, int(p.seed) & 0xFFFFFFFFFFFFFFFF,
+                    len(tables), v_idx, v_fp)
+    return hdr, tables
+
+
+def serialize_filter(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
+    hdr, tables = _header(f)
+    parts = [hdr]
     for t in tables:
         blob = _pack_table(t)
         parts.append(struct.pack("<q", len(blob)))
         parts.append(blob)
     return b"".join(parts)
+
+
+def content_digest(f: CuckooFilter | DynamicCuckooFilter) -> bytes:
+    """md5 over exactly what ``serialize_filter`` encodes (the packed header,
+    then each table's raw lane bytes), without the packing and zlib pass:
+    equal digests mean equal CKF2 blobs.  Every table has the fixed size its
+    header params give, so the concatenation is unambiguous."""
+    hdr, tables = _header(f)
+    h = hashlib.md5(hdr)
+    for t in tables:
+        h.update(np.ascontiguousarray(t.table).data)
+    return h.digest()
 
 
 def deserialize_filter(data: bytes) -> CuckooFilter | DynamicCuckooFilter:

@@ -6,8 +6,9 @@ membership and estimation are queryable from ``spark.sql`` — the
     register_filter(spark, filt, "corpus_contains")
     spark.sql("SELECT * FROM candidates WHERE corpus_contains(token)")
 
-Each registration broadcasts the serialized state once; executors
-deserialize lazily and cache per worker process (see operators/membership).
+A filter registration reuses its content's broadcast and a sketch
+registration broadcasts the serialized state once; executors deserialize
+lazily and cache per worker process (see operators/membership).
 """
 
 from __future__ import annotations

@@ -367,10 +367,9 @@ def cf_contains_kmer_udf(spark: SparkSession, filt: DynamicCuckooFilter,
     a broadcast of *filt* — probe side of the FASTA workload."""
     from pyspark.sql.functions import pandas_udf
 
-    from cuckoofilter_spark.core.serde import serialize_filter
-    from cuckoofilter_spark.operators.membership import _get_filter
+    from cuckoofilter_spark.operators.membership import _get_filter, broadcast_filter
 
-    bc = spark.sparkContext.broadcast(serialize_filter(filt))
+    bc = broadcast_filter(spark, filt)
 
     @pandas_udf("boolean")
     def contains(kmers: pd.Series) -> pd.Series:

@@ -91,6 +91,94 @@ def test_cf_contains_udf_registrable_for_sql(spark, corpus):
     assert n == 100
 
 
+def test_probe_broadcast_serialized_once_per_filter_content(spark, monkeypatch):
+    """Queries against an unchanged filter reuse one broadcast (serialize
+    once); every mutation — insert, delete, merge + compact, a direct table
+    write — re-serializes, and the answers always match the driver's filter."""
+    from collections import OrderedDict
+
+    from cuckoofilter_spark.core import CuckooFilter, DynamicCuckooFilter
+    from cuckoofilter_spark.core.serde import content_digest
+    from cuckoofilter_spark.operators import membership as M
+
+    monkeypatch.setattr(M, "_BROADCASTS", OrderedDict())
+    blobs = []
+    real = M.serialize_filter
+    monkeypatch.setattr(M, "serialize_filter", lambda f: blobs.append(real(f)) or blobs[-1])
+
+    params = CuckooParams(max_table_size=4096, bits_per_fp=16)
+    filt = DynamicCuckooFilter(params, dedup=False)
+    filt.insert(np.arange(0, 5_000, dtype=np.int64))
+    domain = np.arange(0, 20_000, dtype=np.int64)
+    probes = spark.range(0, 20_000).select(F.col("id").alias("k"))
+
+    def query():
+        n = membership_df(spark, filt, probes, "k").count()
+        assert n == int(filt.contains(domain).sum())  # never stale
+        return n
+
+    n1 = query()
+    n2 = query()
+    assert len(blobs) == 1 and n1 == n2
+    assert blobs[0] == serialize_filter(filt)
+    cf_contains_udf(spark, filt)
+    assert len(blobs) == 1
+
+    filt.insert(np.arange(10_000, 12_000, dtype=np.int64))
+    n3 = query()
+    assert len(blobs) == 2 and n3 >= n1 + 2_000 - 10
+    filt.delete(np.arange(0, 1_000, dtype=np.int64))
+    n4 = query()
+    assert len(blobs) == 3 and n4 < n3
+    other = DynamicCuckooFilter(params, dedup=False)
+    other.insert(np.arange(14_000, 17_000, dtype=np.int64))
+    filt.merge(other)
+    filt.compact()
+    n5 = query()
+    assert len(blobs) == 4 and n5 >= n4 + 3_000 - 10
+    assert filt.contains(np.arange(14_000, 17_000, dtype=np.int64)).all()
+    t = filt.tables[0]
+    r, c = np.nonzero(t.table)
+    t.table[r[0], c[0]] ^= 1
+    query()
+    assert len(blobs) == 5
+
+    # same tables, different kind byte -> different content
+    tbl = filt.tables[0]
+    assert len({content_digest(CuckooFilter(params, table=tbl)),
+                content_digest(DynamicCuckooFilter(params, tables=[tbl], dedup=False)),
+                content_digest(DynamicCuckooFilter(params, tables=[tbl], dedup=True))}) == 3
+
+
+def test_worker_filter_cache_evicts_least_recently_used(monkeypatch):
+    """The per-worker deserialized-filter cache is an LRU bounded by table
+    bytes: filling it past the bound evicts the least recently used entry
+    and keeps the one just used."""
+    import hashlib
+    from collections import OrderedDict
+
+    from cuckoofilter_spark.core import DynamicCuckooFilter
+    from cuckoofilter_spark.operators import membership as M
+
+    params = CuckooParams(max_table_size=1024, bits_per_fp=16)
+    blobs = []
+    for lo in (0, 1_000, 2_000):
+        f = DynamicCuckooFilter(params)
+        f.insert(np.arange(lo, lo + 500, dtype=np.int64))
+        blobs.append(serialize_filter(f))
+    size = f.memory_bytes()
+    monkeypatch.setattr(M, "_FILTER_CACHE", OrderedDict())
+    monkeypatch.setattr(M, "_FILTER_CACHE_BYTES", 2 * size)
+    a = M._get_filter(blobs[0])
+    M._get_filter(blobs[1])
+    assert M._get_filter(blobs[0]) is a  # hit, and now most recent
+    M._get_filter(blobs[2])
+    md5 = [hashlib.md5(b).digest() for b in blobs]
+    assert list(M._FILTER_CACHE) == [md5[0], md5[2]]  # blobs[1] evicted
+    assert M._FILTER_CACHE[md5[0]] is a
+    assert M._get_filter(blobs[1]).contains(np.arange(1_000, 1_500)).all()
+
+
 def test_skewed_source_build_with_salting(spark, corpus):
     # explicit repartition over a salted key spreads the 0.7-weight 'web'
     # source across tasks; answers must be unchanged vs the unsalted build
